@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -28,13 +29,13 @@ object Verify {
     // Same planning mode as the bench: stats-fed CBO on the SQL surface,
     // so the correctness gate certifies the exact plans the bench times.
     try GraftEngine.cachedForDir(spark, sfDir).enableCbo(cached = true)
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[verify] stats feed failed (continuing stat-less): ${e.getMessage}")
     }
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

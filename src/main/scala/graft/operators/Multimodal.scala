@@ -135,10 +135,10 @@ object Multimodal {
   // `AudioSystem.getAudioInputStream` re-runs provider discovery per
   // call — paying an UnsupportedAudioFileException per non-matching
   // provider per ROW — and `ImageIO.read` re-scans readers per call.
-  // DecodeProbe measured audio as the live chain's dominant modality
-  // purely from that churn (WAV payloads are ~1 KB). The same JDK
-  // codec classes do the decoding; they are just resolved once per
-  // partition and fed per-row inputs.
+  // `Measure scenario decode` measured audio as the live chain's
+  // dominant modality purely from that churn (WAV payloads are
+  // ~1 KB). The same JDK codec classes do the decoding; they are just
+  // resolved once per partition and fed per-row inputs.
 
   /** The platform's WAV-capable [[javax.sound.sampled.spi.AudioFileReader]],
     * resolved ONCE through the public SPI (probed with a synthesized
@@ -164,7 +164,7 @@ object Multimodal {
     * `ImageIO.createImageInputStream` defaults (useCache=true) to
     * FileCacheImageInputStream — a TEMP FILE created, written, read
     * through, and deleted PER ROW, for bytes we already hold on-heap.
-    * DecodeProbe (round 15, sf10) measured that hidden disk round-trip
+    * `Measure scenario decode` (round 15, sf10) measured that disk trip
     * as the bulk of the metadata chain's cost: the header-only codec
     * reads are microseconds, the stream plumbing was the query. */
   private[operators] def memStream(
@@ -311,7 +311,7 @@ object Multimodal {
           // header-only read: getWidth/getHeight parse the IHDR through
           // the same PNG plugin, WITHOUT rasterizing — this chain
           // reports container metadata, and decoding every pixel to
-          // answer width/height was most of its cost (DecodeProbe sf10
+          // answer width/height was most of its cost (decode scenario, sf10
           // round 15: image_only full decode 12.4 s vs sub-second
           // header walk). The raster path stays certified by the
           // artifact build + m03/m06, which do decode pixels.
@@ -360,7 +360,7 @@ object Multimodal {
             // getNumImages(true) walks the IFD chain; getWidth(0) reads
             // frame 0's directory entries — both through the TIFF
             // plugin, neither decodes a raster (read(0) did, and was
-            // ~half of the sf10 metadata chain: DecodeProbe round 15,
+            // ~half of the sf10 metadata chain: decode scenario, round 15,
             // video_only 11.9 s full decode). Frame rasters stay
             // certified by the artifact build + m05's sampled frames.
             val frames = tiffReader.getNumImages(true)

@@ -295,7 +295,7 @@ object SqlSurfaceQueries {
     * balance; keys %17==3 re-insert shifted by 1e7 into the 'MERGED'
     * segment), register the merged table as `view` (a 2-snapshot log
     * per build). */
-  // private[graft] so MergeSplitProbe can time the WRITE phase apart
+  // private[graft] so `Measure scenario merge-split` can time the WRITE phase apart
   // from the query phase (the PLANS.md x07/x08 exemption evidence).
   private[graft] def mergedCustomerView(e: GraftEngine, view: String): Unit = {
     val customer = e.table("customer")

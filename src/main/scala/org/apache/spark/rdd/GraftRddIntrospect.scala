@@ -3,7 +3,8 @@ package org.apache.spark.rdd
 /** Accessors for RDD checkpoint state that Spark scopes `private[rdd]`.
   *
   * Lives under `org.apache.spark.rdd` ONLY to satisfy that scoping — the
-  * one consumer is graft's bench storage hygiene, which must distinguish
+  * one consumer is `graft.Bench.releaseTransientStorage` (the storage
+  * hygiene Bench and Measure run between queries), which must distinguish
   * an RDD *marked* for local checkpointing (unpersisting it now would
   * make its eventual materialization fail permanently) from one whose
   * checkpoint has materialized (safe to release once unreferenced).

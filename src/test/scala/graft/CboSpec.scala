@@ -155,19 +155,9 @@ class CboSpec extends SparkSpec {
       graft.sources.ArtifactStore.defaultRoot, "table_stats", path)
     assert(new java.io.File(art, "_SUCCESS").exists(), s"no stats artifact at $art")
     // the second feed must not launch a profiling job over the table —
-    // only the one-row artifact read (tracked via a job listener)
-    var scanned = 0L
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        scanned += t.taskMetrics.inputMetrics.recordsRead
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      graft.operators.Profile.feedSessionCatalog(
-        spark, "graft_cat_supplier_c2", path, cached = true)
-      // listener events are async; give the bus a beat to drain
-      Thread.sleep(500)
-    } finally spark.sparkContext.removeSparkListener(l)
+    // only the one-row artifact read
+    val scanned = jobCounts(graft.operators.Profile.feedSessionCatalog(
+      spark, "graft_cat_supplier_c2", path, cached = true)).recordsRead
     val supplierRows = spark.read.parquet(path).count()
     assert(scanned < supplierRows,
       s"cached feed re-scanned the table ($scanned records vs $supplierRows rows)")

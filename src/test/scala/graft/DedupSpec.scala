@@ -544,22 +544,14 @@ class DedupSpec extends SparkSpec {
     // construct the fresh frame BEFORE listening: read.parquet itself
     // runs a schema-inference job, which is not what this test gates
     val again = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobCounts {
       // a FRESH frame over the same files resolves from the cache
       assert(Dedup.corpusRowCount(again) == n)
       // and d05 construction itself (the original count() call site)
       // no longer runs any job at plan-construction time
       Dedup.embeddingCosinePairs(again)
-      Thread.sleep(1000)
-      assert(jobs.get() == 0,
-        s"cached corpus count still ran ${jobs.get()} job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }.jobs
+    assert(jobs == 0, s"cached corpus count still ran $jobs job(s)")
     // a filtered frame has a different canonicalized plan: its count is
     // keyed separately, never served from the full-corpus entry
     val half = embs.filter(col("vec_id") % 2 === 0)

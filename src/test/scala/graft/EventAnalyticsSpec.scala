@@ -482,26 +482,10 @@ class EventAnalyticsSpec extends SparkSpec {
     def build() = EventAnalytics.percentileBands(src, col("event_type"),
       col("ts"), col("value"), col("event_id"))
     build() // first build pays the probe (and seeds the cache)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      build() // same corpus snapshot: probe must be a driver-side map hit
-      // drain the async listener bus DETERMINISTICALLY: a fixed sleep
-      // can let a delayed JobStart event go uncounted (silent false
-      // negative on a slow bus). listenerBus/waitUntilEmpty are
-      // private[spark] (public in bytecode), hence the reflection.
-      val bus = spark.sparkContext.getClass
-        .getMethod("listenerBus").invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        .invoke(bus, java.lang.Long.valueOf(30000L))
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get() == 0,
-      s"re-building q60 over an unchanged corpus ran ${jobs.get()} Spark job(s); " +
+    // same corpus snapshot: probe must be an in-memory map hit
+    val jobs = jobCounts(build()).jobs
+    assert(jobs == 0,
+      s"re-building q60 over an unchanged corpus ran $jobs Spark job(s); " +
         "the hot-group probe must come from the fingerprint cache")
   }
 

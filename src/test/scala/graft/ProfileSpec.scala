@@ -66,12 +66,6 @@ class ProfileSpec extends SparkSpec {
     // the per-column unpivot. The scans hide behind the lazy-checkpoint
     // LogicalRDDs in the plan string, so measure actual file bytes read
     // (the t19 corpus-once technique).
-    def fileBytesRead: Long =
-      org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics
-        .get("file") match {
-        case null => 0L
-        case s => s.getLong("bytesRead")
-      }
     val path = s"$sfDir/orders.parquet"
     val b0 = fileBytesRead
     // full-width single pass (noop reads every column, like the profile)

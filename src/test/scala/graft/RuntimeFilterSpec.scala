@@ -14,17 +14,6 @@ import org.apache.spark.sql.functions._
   */
 class RuntimeFilterSpec extends SparkSpec {
 
-  private def withConfs(pairs: (String, String)*)(body: => Unit): Unit = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("a selective dimension filter injects a bloom filter on the fact side of a shuffle join") {
     // thresholds sized for the local corpus: creation side must be small
     // (it is), application side must look scan-heavy (waive the 10 GB

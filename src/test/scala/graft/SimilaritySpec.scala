@@ -67,7 +67,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("recall@10 floors hold at realistic probe counts (vs s01 ground truth)") {
     // the corpus and every operator are deterministic, so these recalls
-    // are exact reproducible numbers (measured in RecallProbe, floors
+    // are exact reproducible numbers (measured by `Measure scenario recall`, floors
     // set just below them; SCALE.md has the sf0.1/20x sweep):
     //   s02 sign-LSH probes=4: 0.44   s03 IVF nProbe=4: 0.88
     //   s04 k-means IVF nProbe=4: 0.84 (trained centroids overtake

@@ -20,29 +20,8 @@ class SkewScaleSpec extends SparkSpec {
       false
     }
 
-  /** Runtime confs scaled to the local corpus (after column pruning +
-    * shuffle compression the hot partition is single-digit MB; at the
-    * default 256 MB gate the very skew handling we rely on at 100 TB
-    * would sit idle). Restored after each test. */
-  private def withSkewConfs[A](body: => A): A = {
-    val keys = Seq(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "2m",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1m",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
-      "spark.sql.shuffle.partitions" -> "32",
-      // at 100 TB neither fact table broadcasts; locally the pruned
-      // orders projection fits under the 10 MB threshold and Catalyst
-      // would (correctly) broadcast it, dissolving the very shuffle
-      // join whose skew handling this spec asserts
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  /** The scale-adjusted skew gates, restored after each test. */
+  private def withSkewConfs[A](body: => A): A = withConfs(MeasureScenarios.SkewConfs: _*)(body)
 
   test("AQE splits the engineered hot-orderkey partition (skew=true in the executed join)") {
     assume(present, s"$skewDir not generated (sbt 'runMain graft.GenScale')")
@@ -66,13 +45,13 @@ class SkewScaleSpec extends SparkSpec {
     assume(present, s"$skewDir not generated (sbt 'runMain graft.GenScale')")
     withSkewConfs {
       // correctness of the skew defense on REAL skewed data (the
-      // timing delta is measured in SkewProbe → SCALE.md): equal
-      // values share a salt bucket, so per-bucket distinct counts sum
-      // to the exact per-user distinct count
+      // timing delta is measured by `Measure scenario skew`, see
+      // SCALE.md): equal values share a salt bucket, so per-bucket
+      // distinct counts sum to the exact per-user distinct count
       val ev = spark.read.parquet(s"$skewDir/events.parquet")
         .filter(col("event_id") % 100 === 0) // spec-sized slice, keeps the hot user hot
-      val mismatches = SkewProbe.saltedDistinctPerUser(ev).as("s")
-        .join(SkewProbe.naiveDistinctPerUser(ev).as("n"), Seq("user_id"))
+      val mismatches = MeasureScenarios.saltedDistinctPerUser(ev).as("s")
+        .join(MeasureScenarios.naiveDistinctPerUser(ev).as("n"), Seq("user_id"))
         .filter(col("s.n_distinct") =!= col("n.n_distinct")).count()
       assert(mismatches == 0)
     }

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.operators.{Dedup, Similarity}
 
 /** Checkpoint-storage lifecycle (round-4 verdict item 1): a long-lived
@@ -28,26 +24,17 @@ class StorageLifecycleSpec extends SparkSpec {
     // engine construction (parquet schema reads) is out of scope; the
     // invariant is about view REGISTRATION
     val e = GraftEngine.forDir(spark, sfDir)
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      // a lazy checkpoint REGISTERS in the persist map at plan
-      // construction (no blocks yet); the invariant is that no block
-      // is ever computed or stored at registration time
-      def cachedBlocks: Int =
-        sc.getRDDStorageInfo.map(_.numCachedPartitions).sum
-      val before = cachedBlocks
-      e.registerPipelineViews()
-      Thread.sleep(1000) // the listener bus delivers asynchronously
-      assert(jobs.get() == 0,
-        s"view registration ran ${jobs.get()} Spark job(s); views must hold lazy plans")
-      assert(cachedBlocks == before,
-        "view registration materialized checkpoint blocks")
-    } finally sc.removeSparkListener(listener)
+    // a lazy checkpoint REGISTERS in the persist map at plan
+    // construction (no blocks yet); the invariant is that no block
+    // is ever computed or stored at registration time
+    def cachedBlocks: Int =
+      sc.getRDDStorageInfo.map(_.numCachedPartitions).sum
+    val before = cachedBlocks
+    val jobs = jobCounts(e.registerPipelineViews()).jobs
+    assert(jobs == 0,
+      s"view registration ran $jobs Spark job(s); views must hold lazy plans")
+    assert(cachedBlocks == before,
+      "view registration materialized checkpoint blocks")
   }
 
   test("resolveComponents releases per-round checkpoints across repeated calls") {

@@ -114,11 +114,8 @@ class StreamingSpec extends SparkSpec {
     implicit val s = spark
     implicit val sq = spark.sqlContext
     import spark.implicits._
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val before = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val history = Seq(
         Event(1, ts(0), 1, "a", 1.0), Event(2, ts(10), 1, "a", 2.0),
         Event(3, ts(55), 1, "a", 3.0),
@@ -148,9 +145,6 @@ class StreamingSpec extends SparkSpec {
         .as[(Long, Timestamp, Timestamp, Long, Double)].collect()
         .map(t => Session(t._1, t._2, t._3, t._4, t._5))
       assert(streamed.toSeq == batch.toSeq)
-    } finally before match {
-      case Some(v) => spark.conf.set(provider, v)
-      case None => spark.conf.unset(provider)
     }
   }
 

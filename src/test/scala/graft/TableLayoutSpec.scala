@@ -46,7 +46,7 @@ class TableLayoutSpec extends SparkSpec {
     // the order key. On a layout bucketed by that key the aggregate
     // consumes the scan's bucket partitioning and the join arrives
     // co-partitioned: ZERO hash exchanges end-to-end. This is the
-    // amortization BucketedLayoutProbe measures at sf10 — the recipe
+    // amortization `Measure scenario bucketed` measures at sf10 — the recipe
     // that retires the "no plan change removes the aggregate shuffle"
     // exemption at the LAYOUT layer rather than the query layer.
     Seq("orders_h18b", "lineitem_h18b").foreach { t =>

@@ -239,26 +239,12 @@ class TextQueriesSpec extends SparkSpec {
     // at O(1) jobs — the vocab materialization + the single merge job
     // (plus collect of the driver-built merges table)
     val vocab0 = TextQueries.bpeVocab0(spark, sfDir)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def drain(): Unit = {
-      val bus = spark.sparkContext.getClass
-        .getMethod("listenerBus").invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        .invoke(bus, java.lang.Long.valueOf(30000L))
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val jobs = jobCounts {
       val merges = TextQueries.bpeTrainMerges(spark, vocab0, steps = 10)
       assert(merges.count() == 10)
-      drain()
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get() <= 5,
-      s"10-step training scheduled ${jobs.get()} jobs — the fixpoint is no longer in-task")
+    }.jobs
+    assert(jobs <= 5,
+      s"10-step training scheduled $jobs jobs — the fixpoint is no longer in-task")
   }
 
   test("t19 trainer on an EMPTY vocabulary reports dry (no merges), never throws") {
@@ -316,12 +302,6 @@ class TextQueriesSpec extends SparkSpec {
     // file-scheme bytesRead across the whole training run must stay
     // within ~1.2x of a single corpus pass: iterations read the
     // checkpointed vocab, never the parquet again.
-    def fileBytesRead: Long =
-      org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics
-        .get("file") match {
-        case null => 0L
-        case s => s.getLong("bytesRead")
-      }
     // warm the session and measure one corpus pass
     val b0 = fileBytesRead
     spark.read.parquet(s"$sfDir/documents.parquet").selectExpr("sum(length(text))").collect()
