@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetSchema
 import org.apache.spark.sql.types.StructType
 import scala.collection.mutable
 
@@ -55,6 +56,9 @@ final case class GraftConfig(
 final class GraftEngine(val spark: SparkSession,
     val config: GraftConfig = GraftConfig()) {
   private val registered = mutable.LinkedHashMap[String, String]()
+  /** The raw read each parquet-backed table registered with; [[enableCbo]]
+    * feeds the catalog from it instead of reading the table again. */
+  private val parquetReads = mutable.Map[String, DataFrame]()
 
   /** Register a parquet file/directory as a queryable table
     * (reference: catalog.rs `load_table`).
@@ -66,15 +70,18 @@ final class GraftEngine(val spark: SparkSession,
     * type, which has drifted across fixture generations (nanos-as-long
     * vs plain micros). The view stays lazy: normalization is one
     * projected expression on top of the scan, and pushdown through it
-    * is unaffected for every other column. */
+    * is unaffected for every other column. The schema comes from one
+    * driver-side footer read ([[Tables.read]]): registering runs no
+    * Spark job. */
   def loadTable(name: String, path: String): DataFrame = {
-    val raw = spark.read.parquet(path)
+    val raw = Tables.read(spark, path)
     val df =
       if (name == "events" && raw.columns.contains("ts"))
         raw.withColumn("ts", graft.queries.Ops.normalizeEventTs(raw))
       else raw
     df.createOrReplaceTempView(name)
     registered(name) = path
+    parquetReads(name) = raw
     df
   }
 
@@ -94,6 +101,7 @@ final class GraftEngine(val spark: SparkSession,
   def registerDataFrame(name: String, df: DataFrame): DataFrame = {
     df.createOrReplaceTempView(name)
     registered(name) = s"<in-process:$name>"
+    parquetReads.remove(name)
     df
   }
 
@@ -105,6 +113,7 @@ final class GraftEngine(val spark: SparkSession,
   /** Unregister a table (reference: catalog.rs:111 `drop_table`). */
   def dropTable(name: String): Boolean = {
     registered.remove(name)
+    parquetReads.remove(name)
     spark.catalog.dropTempView(name)
   }
 
@@ -399,16 +408,20 @@ final class GraftEngine(val spark: SparkSession,
     * (CboSpec pins a 3-table join changing shape with stats present).
     *
     * Cost: one profiling scan per table, once per corpus — the ANALYZE
-    * trade every warehouse makes. Stats persist in the session catalog;
-    * re-running refreshes them (idempotent). In-process frames (no
-    * file identity) and manifest tables (snapshot views) keep their
-    * lazy registrations and estimate from file sizes as before. */
+    * trade every warehouse makes. With `cached`, that scan's one-row
+    * result persists as an artifact, so a warm session pays one one-row
+    * read per table (one Spark job each) and no schema inference: the
+    * catalog entry takes the schema of the read [[loadTable]] already
+    * resolved. Stats persist in the session catalog; re-running
+    * refreshes them (idempotent). In-process frames (no file identity)
+    * and manifest tables (snapshot views) keep their lazy registrations
+    * and estimate from file sizes as before. */
   def enableCbo(cached: Boolean = false): Unit = {
     registered.toSeq.foreach { case (name, path) =>
-      if (!path.startsWith("<in-process:")) {
-        // catalog names carry a path tag: CREATE TABLE IF NOT EXISTS
-        // cannot repoint, so two engines over different corpora in one
-        // session (spec suites, multi-dir sessions) must not collide
+      parquetReads.get(name).foreach { raw =>
+        // catalog names carry a path tag: an existing catalog entry is
+        // kept, never repointed, so two engines over different corpora
+        // in one session (spec suites, multi-dir sessions) must not collide
         // on a shared `graft_cat_<name>` or the second corpus would
         // silently read the first's files through the repointed view.
         // A full md5 of the path, not String.hashCode: a 32-bit hash
@@ -417,7 +430,7 @@ final class GraftEngine(val spark: SparkSession,
         // tag exists to prevent, just lower probability.
         val dirTag = GraftEngine.pathTag(path)
         val catName = s"graft_cat_${name}_$dirTag"
-        operators.Profile.feedSessionCatalog(spark, catName, path, cached)
+        operators.Profile.feedSessionCatalog(spark, catName, path, raw, cached)
         val cat = spark.table(catName)
         val df =
           if (name == "events" && cat.columns.contains("ts"))
@@ -649,5 +662,15 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference job: the
+    * schema comes from one driver-side footer read of the file Spark's
+    * inference would pick, converted the way Spark converts it
+    * ([[org.apache.spark.sql.execution.datasources.parquet.GraftParquetSchema]]),
+    * so the frame and its plans are the same. Falls back to the plain
+    * read where one footer does not decide the schema. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    GraftParquetSchema.footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 }

@@ -18,14 +18,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The session runs on `local[$SPARK_GRAFT_CPUS]` (default: the
   * processor count) with one shuffle partition per core, over the
   * corpus at `SPARK_GRAFT_SF_DIR` (default: Bench's sf0.1 corpus).
-  * `time` and `plan` first build the bench artifacts and feed table
-  * stats, so they see the plans Bench times and Verify certifies.
+  * `time` and `plan` first feed table stats and build the bench
+  * artifacts, so they see the plans Bench times and Verify certifies.
   *
-  *  - `time`: per query, one untimed warm pass, then [[Passes]] timed
-  *    noop-sink passes, each split into DataFrame build, planning and
-  *    execution with the jobs, stages and tasks each ran. With `--set`
-  *    the passes run A B B A, B with the confs set, so a drift in
-  *    machine load cannot read as an A/B difference.
+  *  - `time`: first one `setup` line with the ms and jobs of each set-up
+  *    step (register, stats, resolve); then, per query, one untimed warm
+  *    pass and [[Passes]] timed noop-sink passes, each split into
+  *    DataFrame build, planning and execution with the jobs, stages and
+  *    tasks each ran. With `--set` the passes run A B B A, B with the
+  *    confs set, so a drift in machine load cannot read as an A/B
+  *    difference.
   *  - `plan`: the formatted physical plan and its exchange count. With
   *    `--exec`, the final adaptive plan after a run, with its reused
   *    exchanges, scans and cached reads (AQE reuses only at run time).
@@ -56,11 +58,17 @@ object Measure {
     words match {
       case "time" :: names if names.nonEmpty && !exec =>
         val qs = names.map(n => n -> query(spark, sfDir, n))
-        prepare(spark, sfDir)
-        time(spark, sets, qs)
+        val counter = new GraftJobCounter(spark.sparkContext)
+        try {
+          val steps = prepare(spark, sfDir, counter)
+          println("[measure] setup " + steps.map { case (step, ms, jobs) =>
+            s"$step=${Bench.num(ms, 0)}ms/${jobs}jobs" }.mkString(" "))
+          time(spark, sets, qs, counter)
+        } finally counter.close()
       case "plan" :: names if names.nonEmpty =>
         val qs = names.map(n => n -> query(spark, sfDir, n))
-        prepare(spark, sfDir)
+        val counter = new GraftJobCounter(spark.sparkContext)
+        try prepare(spark, sfDir, counter) finally counter.close()
         withConfs(spark, sets)(plan(exec, qs))
       case "scenario" :: name :: rest if sets.isEmpty && !exec =>
         MeasureScenarios.all.getOrElse(name, throw new IllegalArgumentException(Usage))(
@@ -83,10 +91,22 @@ object Measure {
     case Nil => (sets, exec, words)
   }
 
-  private def prepare(spark: SparkSession, sfDir: String): Unit = {
-    Bench.artifactBuilders.foreach { case (_, ensure) => ensure(spark, sfDir) }
-    GraftEngine.cachedForDir(spark, sfDir).enableCbo(cached = true)
+  /** A session's set-up, in the benchmark's order: register the corpus,
+    * feed its cached table stats, resolve the bench artifacts. Returns
+    * each step's (name, wall ms, Spark jobs). */
+  private def prepare(spark: SparkSession, sfDir: String,
+      counter: GraftJobCounter): Seq[(String, Double, Long)] = {
+    def step(name: String)(body: => Unit) = {
+      counter.reset()
+      val ms = secs(body)._2 * 1e3
+      (name, ms, counter.counts.jobs)
+    }
+    val steps = Seq(
+      step("register")(GraftEngine.cachedForDir(spark, sfDir)),
+      step("stats")(GraftEngine.cachedForDir(spark, sfDir).enableCbo(cached = true)),
+      step("resolve")(Bench.artifactBuilders.foreach { case (_, ensure) => ensure(spark, sfDir) }))
     Bench.releaseTransientStorage(spark)
+    steps
   }
 
   /** Runs `body` with `confs` set on the session, then restores them. */
@@ -114,11 +134,10 @@ object Measure {
     }
 
   private def time(spark: SparkSession, sets: Seq[(String, String)],
-      queries: Seq[(String, () => DataFrame)]): Unit = {
+      queries: Seq[(String, () => DataFrame)], counter: GraftJobCounter): Unit = {
     val sides = if (sets.isEmpty) Seq.fill(Passes)("") else Seq("A", "B", "B", "A")
     def confs(side: String) = if (side == "B") sets else Nil
-    val counter = new GraftJobCounter(spark.sparkContext)
-    try queries.foreach { case (name, q) =>
+    queries.foreach { case (name, q) =>
       sides.distinct.foreach { side =>
         withConfs(spark, confs(side))(noop(q()))
         Bench.releaseTransientStorage(spark)
@@ -146,7 +165,7 @@ object Measure {
             s"buildJobs=${build.jobs} buildStages=${build.stages} buildTasks=${build.tasks}")
         }
       }
-    } finally counter.close()
+    }
   }
 
   private def plan(exec: Boolean, queries: Seq[(String, () => DataFrame)]): Unit =

@@ -265,7 +265,7 @@ object MeasureScenarios {
       sink("silences", EventStreams.silenceFacts(events.as[Event],
         minGapUs = 200000L, watermark = wm)))
 
-    val samples = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
+    val samples = scala.collection.mutable.ArrayBuffer.empty[(String, SoakSample)]
     val t0 = System.nanoTime()
     while ((System.nanoTime() - t0) / 1e9 < seconds) {
       Thread.sleep(5000)
@@ -274,25 +274,48 @@ object MeasureScenarios {
         val op = s"$tag/${so.operatorName}"
         val bytes = Option(so.customMetrics.get("rocksdbSstFileSize"))
           .map(_.longValue()).getOrElse(so.memoryUsedBytes)
-        samples += ((t, op, so.numRowsTotal))
+        samples += op -> SoakSample(t, so.numRowsTotal, p.numInputRows)
         json("sec" -> t, "op" -> op, "state_rows" -> so.numRowsTotal,
           "state_bytes" -> bytes, "events" -> p.numInputRows)
       }
     }
     streams.foreach(_._2.stop())
 
-    // plateau verdict: peak state rows in the middle third vs the final
-    // third — bounded state does not keep growing
-    samples.groupBy(_._2).foreach { case (op, ss) =>
-      val horizon = ss.map(_._1).max
-      def peak(lo: Double, hi: Double) = ss.filter(x => x._1 >= horizon * lo && x._1 <= horizon * hi)
-        .map(_._3).maxOption.getOrElse(0L)
-      val mid = peak(1.0 / 3, 2.0 / 3)
-      val fin = peak(2.0 / 3, 1.0)
-      val growth = if (mid == 0) Double.NaN else (fin - mid).toDouble / mid
-      json("op" -> op, "peak_rows_mid" -> mid, "peak_rows_final" -> fin,
-        "final_vs_mid_growth" -> growth, "soak_sec" -> horizon, "plateau" -> (growth < 0.2))
+    samples.groupBy(_._1).foreach { case (op, ss) =>
+      val v = plateau(ss.map(_._2).toSeq)
+      json("op" -> op, "peak_rows_mid" -> v.peakMid, "peak_rows_final" -> v.peakFinal,
+        "final_vs_mid_growth" -> v.growth, "live_from_sec" -> v.fromSec,
+        "soak_sec" -> v.toSec, "plateau" -> v.plateau)
     }
+  }
+
+  /** One progress sample of a stateful operator: seconds since the soak
+    * started, its state rows, and the input rows of that micro-batch. */
+  final case class SoakSample(sec: Long, stateRows: Long, inputRows: Long)
+
+  /** Peak state rows in the middle and the final third of the live
+    * window [fromSec, toSec]; `growth` is NaN when it cannot be judged. */
+  final case class Plateau(fromSec: Long, toSec: Long, peakMid: Long, peakFinal: Long,
+      growth: Double) {
+    /** Bounded state does not keep growing. */
+    def plateau: Boolean = growth < 0.2
+  }
+
+  /** The plateau verdict over one operator's samples. The live window
+    * starts at the first sample with input: before it a stream is still
+    * starting and reports no input and no state, and counting those
+    * seconds would put the middle third's peak at zero. Fewer than two
+    * live sample times, or an empty middle third, give NaN growth. */
+  def plateau(samples: Seq[SoakSample]): Plateau = {
+    val live = samples.sortBy(_.sec).dropWhile(_.inputRows == 0)
+    val (from, to) = if (live.isEmpty) (0L, 0L) else (live.head.sec, live.last.sec)
+    def peak(lo: Double, hi: Double) = live.filter { s =>
+      s.sec >= from + (to - from) * lo && s.sec <= from + (to - from) * hi
+    }.map(_.stateRows).maxOption.getOrElse(0L)
+    val mid = peak(1.0 / 3, 2.0 / 3)
+    val fin = peak(2.0 / 3, 1.0)
+    Plateau(from, to, mid, fin,
+      if (mid == 0 || to == from) Double.NaN else (fin - mid).toDouble / mid)
   }
 
   /** The MERGE/vacuum lifecycle on replicated orders: COW merge cost is

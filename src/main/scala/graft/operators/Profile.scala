@@ -57,9 +57,10 @@ object Profile {
     * Catalyst's cost-based optimizer can use them — the layer the
     * reference's hand-rolled join reordering (optimizer.rs:9
     * JoinReordering) maps onto in Spark. Registers `path` as an
-    * external parquet catalog table `name` (idempotent; no data moves)
-    * and attaches [[statsRow]]'s numbers — row count, per-column null
-    * counts, HLL distinct counts, numeric min/max — as
+    * external parquet catalog table `name` (idempotent; no data moves;
+    * the entry takes the schema of the read of `path`, so no inference
+    * job runs) and attaches [[statsRow]]'s numbers — row count,
+    * per-column null counts, HLL distinct counts, numeric min/max — as
     * `CatalogStatistics`, exactly what `ANALYZE TABLE ... COMPUTE
     * STATISTICS FOR ALL COLUMNS` would store, from the profiler's ONE
     * scan instead of ANALYZE's own.
@@ -73,9 +74,16 @@ object Profile {
     * has paid for its worst shuffle before AQE sees the sizes, while
     * CBO orders the plan before anything runs. */
   def feedSessionCatalog(spark: org.apache.spark.sql.SparkSession,
-      name: String, path: String, cached: Boolean = false): Unit = {
-    val df = spark.read.parquet(path)
-    spark.sql(s"CREATE TABLE IF NOT EXISTS `$name` USING PARQUET LOCATION '$path'")
+      name: String, path: String, cached: Boolean = false): Unit =
+    feedSessionCatalog(spark, name, path, graft.Tables.read(spark, path), cached)
+
+  /** [[feedSessionCatalog]] over `df`, the caller's existing read of
+    * `path` (GraftEngine.enableCbo passes the read its table registered
+    * with). */
+  def feedSessionCatalog(spark: org.apache.spark.sql.SparkSession,
+      name: String, path: String, df: DataFrame, cached: Boolean): Unit = {
+    if (!spark.catalog.tableExists(name))
+      spark.catalog.createTable(name, "parquet", df.schema, Map("path" -> path))
     // `cached` persists the single stats row as a fingerprint-guarded
     // artifact: the ANALYZE scan runs once per corpus vintage, every
     // later session feeds the catalog from a one-row parquet read —

@@ -117,18 +117,18 @@ object Ops {
     * hand-ordered because this path was stat-less) — and the raised
     * broadcast threshold's decompressed-size justification now holds
     * for these frames too. Outside CBO mode (specs, ad-hoc sessions)
-    * this is a plain lazy parquet read, estimated from file sizes as
-    * before; the fallthrough also covers CBO sessions whose catalog
-    * has no entry for this corpus dir. Schema and values are identical
-    * either way (same files), so oracles don't care which path planned
-    * the scan. */
+    * this is a plain lazy parquet read ([[graft.Tables.read]]),
+    * estimated from file sizes as before; the fallthrough also covers
+    * CBO sessions whose catalog has no entry for this corpus dir. Schema
+    * and values are identical either way (same files), so oracles don't
+    * care which path planned the scan. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     if (spark.conf.get("spark.sql.cbo.enabled", "false") == "true") {
       val cat = s"graft_cat_${name}_${graft.GraftEngine.pathTag(path)}"
       if (spark.catalog.tableExists(cat)) return spark.table(cat)
     }
-    spark.read.parquet(path)
+    graft.Tables.read(spark, path)
   }
 
   /** DuckDB twin of [[graft.operators.Dedup.dot]]: sequential fold in

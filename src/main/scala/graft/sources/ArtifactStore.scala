@@ -56,6 +56,11 @@ object ArtifactStore {
     * committed FILES — storage-independent, reusable across sessions,
     * and immune to cache/checkpoint hygiene sweeps.
     *
+    * Cost on a warm store: driver-side metadata only — the source's
+    * file listing and fingerprint, the marker probes, and one footer
+    * read for the served frame's schema ([[graft.Tables.read]]). No
+    * Spark job runs until the caller uses the frame.
+    *
     * Commit protocol is scheme-routed like TableLayout's manifests:
     * rename-capable filesystems build in a temp dir and swap with one
     * atomic rename; object-store schemes (no atomic rename) build an
@@ -101,7 +106,7 @@ object ArtifactStore {
         }
       }
     }
-    spark.read.parquet(path)
+    graft.Tables.read(spark, path)
   }
 
   /** Object-store commit: resolve the fingerprint's pointer file to
@@ -143,7 +148,7 @@ object ArtifactStore {
     }
     val vd = resolve().getOrElse(throw new IllegalStateException(
       s"artifact pointer vanished at $ptr"))
-    spark.read.parquet(vd.toString)
+    graft.Tables.read(spark, vd.toString)
   }
 
   private val FingerprintFile = "_graft_source_fp"
